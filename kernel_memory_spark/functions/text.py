@@ -28,24 +28,9 @@ def unicode_trim(col: Column) -> Column:
     return F.regexp_replace(col, r"(?U)^\s+|\s+$", "")
 
 
-def strip_bom(col: Column) -> Column:
-    """C2: remove UTF-8 BOM (SaveRecordsHandler.cs:152)."""
-    return F.regexp_replace(col, "^﻿", "")
-
-
-def content_sha256(col: Column) -> Column:
-    """C3: SHA-256 content hash (TextPartitioningHandler.cs:177)."""
-    return F.sha2(col, 256)
-
-
 def record_id(doc_id: Column, part_id: Column) -> Column:
     """C9: record id `d={documentId}//p={partId}` (SaveRecordsHandler.cs:32-43)."""
     return F.format_string("d=%s//p=%s", doc_id, part_id)
-
-
-def partition_file_id(file_id: Column, partition_number: Column) -> Column:
-    """C10: `{name}.partition.{n}` (DataPipeline.cs:196-199), sans extension."""
-    return F.format_string("%s.partition.%d", file_id, partition_number)
 
 
 def normalize_index_name(col: Column, default: str = "default") -> Column:

@@ -14,8 +14,6 @@ so both sides produce bit-identical vectors.
 
 from __future__ import annotations
 
-from typing import Iterable, List
-
 import numpy as np
 
 DEFAULT_DIM = 64
@@ -24,13 +22,6 @@ GENERATOR = "char3-v2"
 
 _KNUTH = np.uint64(2654435761)
 _MASK32 = np.uint64(0xFFFFFFFF)
-
-
-def _char_ngrams(text: str, n: int = 3) -> List[str]:
-    t = " " + text.lower() + " "
-    if len(t) < n:
-        return [t]
-    return [t[i : i + n] for i in range(len(t) - n + 1)]
 
 
 def hash_embed(text: str, dim: int = DEFAULT_DIM) -> np.ndarray:
@@ -54,10 +45,6 @@ def hash_embed(text: str, dim: int = DEFAULT_DIM) -> np.ndarray:
     if norm > 0:
         vec = vec / norm
     return vec.astype(np.float32)
-
-
-def hash_embed_batch(texts: Iterable[str], dim: int = DEFAULT_DIM) -> List[np.ndarray]:
-    return [hash_embed(t if t is not None else "", dim) for t in texts]
 
 
 def cosine(a: np.ndarray, b: np.ndarray) -> float:

@@ -21,7 +21,7 @@ The output edge set feeds connected components (operators/canonicalize.py).
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterator, Optional
 
 import pandas as pd
 
@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from kernel_memory_spark.functions.minhash import band_keys, jaccard, minhash_signature
 from kernel_memory_spark.functions.vectors import cosine, hash_embed
+from kernel_memory_spark.sources.tables import table_columns
 
 JACCARD_THRESHOLD = 0.5
 COSINE_THRESHOLD = 0.6
@@ -40,6 +41,10 @@ DEFAULT_SALT_BUCKETS = 16
 # would otherwise contribute O(bucket^2) candidate pairs. The single-node
 # oracle applies the identical cap (oracle.link_surfaces).
 BAND_BUCKET_CAP = 64
+# outputs of the two Python-UDF stages, and so the schemas of the
+# incremental refresh's memo tables
+SIGNATURES_SCHEMA = "norm string, bands array<string>"
+SCORES_SCHEMA = "a string, b string, jaccard double, cosine double"
 
 
 def salted_surface_counts(
@@ -68,9 +73,7 @@ def surface_signatures(surfaces: DataFrame) -> DataFrame:
             bands = [band_keys(minhash_signature(n)) for n in pdf["norm"]]
             yield pd.DataFrame({"norm": pdf["norm"], "bands": bands})
 
-    return surfaces.select("norm").mapInPandas(
-        run, schema="norm string, bands array<string>"
-    )
+    return surfaces.select("norm").mapInPandas(run, schema=SIGNATURES_SCHEMA)
 
 
 def candidate_pairs(
@@ -141,9 +144,7 @@ def score_pairs(pairs: DataFrame) -> DataFrame:
                 {"a": pdf["a"], "b": pdf["b"], "jaccard": jac, "cosine": cos}
             )
 
-    return pairs.mapInPandas(
-        run, schema="a string, b string, jaccard double, cosine double"
-    )
+    return pairs.mapInPandas(run, schema=SCORES_SCHEMA)
 
 
 def link_entities(
@@ -166,31 +167,24 @@ def link_entities(
 
 
 # ---------------------------------------------------------------------------
-# Incremental linking (the streaming refresh_graph's remaining O(accumulated)
-# cost): link_entities re-signs and re-pairs EVERY accumulated surface on
-# every refresh. This state machine confines the expensive stages —
-# signature UDF, pair generation, verification UDF — to the NEW surfaces,
-# while converging to exactly what link_entities computes over the full
-# corpus (append-only streams; a re-upload that REMOVES a surface needs a
-# full refresh, documented on refresh_links_incremental).
+# Incremental linking (refresh_graph_incremental). Of the four link stages
+# only the two Python UDFs — MinHash signing and pair verification — are
+# worth remembering between refreshes; band grouping is a cheap JVM
+# aggregate, so candidate pairs are rebuilt every refresh by the batch
+# path's own candidate_pairs. That replays the hot-bucket cap with current
+# band counts: a band that crosses the cap withdraws its pairs exactly as
+# link_entities over all mentions would never have emitted them.
 #
-# Persisted state (all bucket-scoped merges — no O(state) rewrites):
-#   {p}_surfaces      (norm)               surfaces already processed
-#   {p}_band_members  (band, norm)         the exploded LSH band table
-#   {p}_band_pairs    (band, a, b)         per-band candidate contributions;
-#                                          a NULL sentinel row marks a band
-#                                          recomputed to an empty set
-#   {p}_edge_scores   (a, b, jaccard, cosine)  verification memo
+# Persisted state, both append-only (auto_compact folds the appends):
+#   {p}_surfaces     (norm, bands)              signatures already computed
+#   {p}_edge_scores  (a, b, jaccard, cosine)    verifications already run
 #
-# Per refresh: new surfaces sign (UDF O(new)); bands containing a new
-# surface are recomputed FROM CURRENT MEMBERSHIP (pruned read of exactly
-# those band buckets) — this replays the hot-bucket cap with up-to-date
-# counts, so a band crossing the cap retroactively withdraws its pairs,
-# exactly as a batch run would never have emitted them; only never-scored
-# pairs hit the verification UDF (scores are deterministic in (a, b)).
+# Both are deterministic in their keys, so a stored row never goes stale.
+# Per refresh: look the surfaces mentioned NOW up in {p}_surfaces and sign
+# only the misses; pair those signatures; look the pairs up in
+# {p}_edge_scores and score only the misses; the edges are the pairs whose
+# scores pass both thresholds.
 # ---------------------------------------------------------------------------
-
-LINK_STATE_BUCKETS = 64
 
 
 def refresh_links_incremental(
@@ -201,119 +195,64 @@ def refresh_links_incremental(
     cosine_threshold: float = COSINE_THRESHOLD,
     bucket_cap: int = BAND_BUCKET_CAP,
     prefix: str = "link",
+    compact_threshold: Optional[int] = 8,
 ) -> DataFrame:
-    """Update the incremental linking state with `mentions` and return the
-    CURRENT alias edges (a, b, jaccard, cosine) — bit-identical to
-    link_entities(all mentions) for append-only corpora (asserted by
-    tests/test_streaming_ingest.py). Surfaces that disappear from the
-    corpus (re-upload shrinking a document) are NOT withdrawn from the
-    state; run the full refresh for that case."""
-    sfc = f"{prefix}_surfaces"
-    mem = f"{prefix}_band_members"
-    prs = f"{prefix}_band_pairs"
-    scr = f"{prefix}_edge_scores"
-
-    surfaces = mentions.select("norm").distinct()
-    if catalog.exists(sfc):
-        known = catalog.read(spark, sfc).select("norm")
-        new = surfaces.join(known, "norm", "left_anti")
-    else:
-        new = surfaces
-    new = new.localCheckpoint()
-    if new.isEmpty():
-        return current_links(
-            spark, catalog, jaccard_threshold, cosine_threshold, prefix
-        )
-
-    # 1) sign ONLY the new surfaces (the Arrow UDF is O(new))
-    sigs = surface_signatures(new).localCheckpoint()
-    catalog.merge_bucketed(
-        spark, sfc, sigs.select("norm"), ["norm"], "norm",
-        n_buckets=LINK_STATE_BUCKETS,
+    """Update the linking memo with `mentions` and return the CURRENT alias
+    edges (a, b, jaccard, cosine) — the same set link_entities(mentions)
+    returns, also after a re-upload removed surfaces (their memo rows stay
+    but pair with nothing). A refresh with nothing new commits nothing;
+    `compact_threshold` (None disables) bounds the memo's append entries."""
+    sfc, scr = f"{prefix}_surfaces", f"{prefix}_edge_scores"
+    _drop_legacy_state(catalog, prefix)
+    sigs = _memoized(
+        spark, catalog, sfc, SIGNATURES_SCHEMA,
+        mentions.select("norm").distinct(), surface_signatures,
     )
-    new_members = sigs.select(F.explode("bands").alias("band"), "norm")
-    catalog.merge_bucketed(
-        spark, mem, new_members, ["band", "norm"], "band",
-        n_buckets=LINK_STATE_BUCKETS,
+    scores = _memoized(
+        spark, catalog, scr, SCORES_SCHEMA,
+        candidate_pairs(sigs, bucket_cap), score_pairs,
     )
-
-    # 2) recompute candidate pairs for exactly the bands a new surface
-    # touched, from CURRENT membership: a bucket-pruned read (band hashes
-    # to its bucket) + the same cap as the batch path
-    touched = new_members.select("band").distinct().localCheckpoint()
-    wanted = [
-        r[0] for r in touched.select(
-            catalog._bucket_expr("band", LINK_STATE_BUCKETS).alias("b")
-        ).distinct().collect()
-    ]
-    members = catalog.read_buckets(spark, mem, wanted).join(
-        touched, "band", "left_semi"
-    ).localCheckpoint()  # feeds the cap agg and both self-join sides
-    hot = (
-        members.groupBy("band").agg(F.count("*").alias("n"))
-        .filter(F.col("n") > bucket_cap).select("band")
-    )
-    cool = members.join(F.broadcast(hot), "band", "left_anti")
-    l, r = cool.alias("l"), cool.alias("r")
-    pairs = (
-        l.join(r, F.col("l.band") == F.col("r.band"))
-        .filter(F.col("l.norm") < F.col("r.norm"))
-        .select(
-            F.col("l.band").alias("band"),
-            F.col("l.norm").alias("a"), F.col("r.norm").alias("b"),
-        )
-    ).localCheckpoint()  # feeds both the band_pairs merge and scoring
-    # sentinel row per touched band: merge_bucketed's anti-join drops ALL
-    # old rows of every touched band even when its recomputed pair set is
-    # empty (hot-crossing withdraws the band's prior contribution)
-    sentinels = touched.select(
-        "band", F.lit(None).cast("string").alias("a"),
-        F.lit(None).cast("string").alias("b"),
-    )
-    catalog.merge_bucketed(
-        spark, prs, pairs.unionByName(sentinels),
-        ["band", "a", "b"], "band", n_buckets=LINK_STATE_BUCKETS,
-        anti_cols=["band"],
-    )
-
-    # 3) verify only never-scored pairs (scores deterministic in (a, b))
-    cand = pairs.select("a", "b").distinct()
-    if catalog.exists(scr):
-        seen = catalog.read(spark, scr).select("a", "b")
-        cand = cand.join(seen, ["a", "b"], "left_anti")
-    fresh_scores = score_pairs(cand)
-    catalog.merge_bucketed(
-        spark, scr, fresh_scores, ["a", "b"], "a",
-        n_buckets=LINK_STATE_BUCKETS,
-    )
-    return current_links(
-        spark, catalog, jaccard_threshold, cosine_threshold, prefix
-    )
-
-
-def current_links(
-    spark,
-    catalog,
-    jaccard_threshold: float = JACCARD_THRESHOLD,
-    cosine_threshold: float = COSINE_THRESHOLD,
-    prefix: str = "link",
-) -> DataFrame:
-    """Alias edges implied by the current state: a pair is an edge iff it
-    is still justified by some cool band AND its memoized verification
-    passes both thresholds. Ids-only JVM join, no Python."""
-    prs = f"{prefix}_band_pairs"
-    scr = f"{prefix}_edge_scores"
-    if not (catalog.exists(prs) and catalog.exists(scr)):
-        return spark.createDataFrame(
-            [], "a string, b string, jaccard double, cosine double"
-        )
-    valid = (
-        catalog.read(spark, prs)
-        .filter(F.col("a").isNotNull())
-        .select("a", "b").distinct()
-    )
-    scores = catalog.read(spark, scr)
-    return scores.join(valid, ["a", "b"], "left_semi").filter(
+    if compact_threshold:
+        for name in (sfc, scr):
+            catalog.auto_compact(spark, name, compact_threshold)
+    return scores.filter(
         (F.col("jaccard") >= jaccard_threshold)
         & (F.col("cosine") >= cosine_threshold)
     )
+
+
+def _memoized(spark, catalog, name: str, schema: str, todo: DataFrame,
+              compute) -> DataFrame:
+    """`compute(todo)`, answered from the append-only memo table `name`
+    where it already holds a row's key; only the misses reach `compute`,
+    and they are appended. `compute` must be deterministic in the key
+    columns (`todo`'s columns). An append that lands no rows commits
+    nothing. The returned frame reads no table: later compaction of the
+    memo cannot change it."""
+    keys = todo.columns
+    hits = None
+    if catalog.exists(name):
+        stored = catalog.read(spark, name, schema=schema)
+        value = [c for c in stored.columns if c not in keys][0]
+        # checkpointed: feeds both the hits and the misses
+        looked = todo.join(stored, keys, "left").localCheckpoint(eager=False)
+        hits = looked.filter(F.col(value).isNotNull())
+        todo = looked.filter(F.col(value).isNull()).select(*keys)
+    # checkpointed: feeds both the append and the result, which the
+    # append materializes
+    fresh = compute(todo).localCheckpoint(eager=False)
+    catalog.append(fresh, name)
+    return fresh if hits is None else hits.unionByName(fresh)
+
+
+def _drop_legacy_state(catalog, prefix: str) -> None:
+    """Catalogs written before the two-table memo kept per-band tables and a
+    signature-less surfaces table: drop the whole old state once, so the
+    next refresh rebuilds it from scratch."""
+    legacy = [f"{prefix}_band_members", f"{prefix}_band_pairs"]
+    sfc = f"{prefix}_surfaces"
+    if any(catalog.exists(t) for t in legacy) or (
+        catalog.exists(sfc) and "bands" not in table_columns(catalog, sfc)
+    ):
+        for t in legacy + [sfc, f"{prefix}_edge_scores"]:
+            catalog.drop(t)

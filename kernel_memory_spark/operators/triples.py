@@ -29,11 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kernel_memory_spark.functions.extraction import (
-    extract_mentions,
-    extract_triples,
-    normalize_mention,
-)
+from kernel_memory_spark.functions.extraction import extract_mentions
 
 
 def lineage_triples(
@@ -94,9 +90,6 @@ def lineage_triples(
 
 
 _MENTION_SCHEMA = "doc_id string, partition_id string, mention string, norm string"
-_PATTERN_SCHEMA = (
-    "doc_id string, partition_id string, subj string, pred string, obj string"
-)
 # combined single-pass schema: kind='m' rows carry (mention, norm) in
 # (subj, obj); kind='t' rows carry (subj_norm, pred, obj_norm)
 _EXTRACT_SCHEMA = (
@@ -190,28 +183,6 @@ def extract_mentions_df(partitions: DataFrame) -> DataFrame:
 
     return partitions.select("doc_id", "partition_id", "text").mapInPandas(
         run, schema=_MENTION_SCHEMA
-    )
-
-
-def extract_pattern_triples_df(partitions: DataFrame) -> DataFrame:
-    """Raw pattern triples with normalized-surface endpoints."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, pid, text in zip(
-                pdf["doc_id"], pdf["partition_id"], pdf["text"]
-            ):
-                for s, p, o in extract_triples(text or ""):
-                    rows.append(
-                        (doc_id, pid, normalize_mention(s), p, normalize_mention(o))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "partition_id", "subj", "pred", "obj"]
-            )
-
-    return partitions.select("doc_id", "partition_id", "text").mapInPandas(
-        run, schema=_PATTERN_SCHEMA
     )
 
 

@@ -61,6 +61,8 @@ def get_spark(
     return spark
 
 
+# application ids of the sessions already prewarmed: an id() of a stopped
+# session can be reused by the next one, an application id never is
 _PREWARMED: set = set()
 
 
@@ -72,7 +74,7 @@ def _prewarm_python_workers(spark) -> None:
     (spark.python.worker.reuse default), so this is per-session setup cost
     moved out of the first query — no data is touched, nothing is cached.
     Disable with SPARK_GRAFT_PREWARM=0."""
-    key = id(spark)
+    key = spark.sparkContext.applicationId
     if key in _PREWARMED:
         return
     _PREWARMED.add(key)

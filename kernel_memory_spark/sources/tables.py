@@ -103,13 +103,17 @@ class TableCatalog:
         return entry if isinstance(entry, str) else entry["path"]
 
     def read(self, spark: SparkSession, name: str,
-             version: Optional[int] = None) -> DataFrame:
+             version: Optional[int] = None,
+             schema: Optional[str] = None) -> DataFrame:
+        """A caller that knows the table's `schema` (DDL string) saves the
+        schema-inference job a plain parquet read launches."""
         manifest = self._manifest(name, version)
         paths = [
             os.path.join(self._dir(name), self._entry_path(d))
             for d in manifest["data"]
         ]
-        return spark.read.parquet(*paths)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*paths)
 
     def read_buckets(self, spark: SparkSession, name: str,
                      buckets) -> DataFrame:
@@ -140,8 +144,15 @@ class TableCatalog:
         return self._commit(name, [os.path.relpath(d, self._dir(name))])
 
     def append(self, df: DataFrame, name: str) -> int:
+        """A write that lands no rows in an existing table commits nothing
+        (checked on the written footers: no count job)."""
         d = self._new_data_dir(name)
         df.write.mode("overwrite").parquet(d)
+        if self.exists(name) and not any(
+            n for _, n in _parquet_file_counts(d)
+        ):
+            shutil.rmtree(d, ignore_errors=True)
+            return self.current_version(name)
         rel = os.path.relpath(d, self._dir(name))
         prev, bucketing = [], None
         if self.exists(name):
@@ -679,6 +690,19 @@ def table_file_counts(catalog: "TableCatalog", name: str) -> list:
             )
         )
     return counts
+
+
+def table_columns(catalog: "TableCatalog", name: str) -> List[str]:
+    """Column names of `name` from one parquet footer — no Spark job."""
+    import pyarrow.parquet as pq
+
+    for e in catalog._entries(name):
+        root = os.path.join(catalog._dir(name), e["path"])
+        for dirpath, _dirs, files in os.walk(root):
+            for fn in files:
+                if fn.endswith(".parquet"):
+                    return pq.read_schema(os.path.join(dirpath, fn)).names
+    return []
 
 
 def table_row_count(catalog: "TableCatalog", name: str) -> int:

@@ -21,10 +21,18 @@ message is a document batch routed through the handler chain):
   nor what production KG systems do. They run as a periodic batch job over
   the ACCUMULATED extractions table — the lambda-architecture split:
   streaming upsert, periodic global refine.
+- `refresh_graph_incremental` — the same refine, with linking's two
+  Python-UDF stages memoized across refreshes in two append-only tables:
+  `link_surfaces` (norm, MinHash bands) and `link_edge_scores` (a, b,
+  jaccard, cosine). A refresh signs only surfaces it has not seen and
+  scores only candidate pairs it has not scored; the candidate pairs
+  themselves, and everything after linking, are recomputed in full.
 
 At 100TB: each micro-batch's work is O(batch) (bucket-scoped merges; the
-bucket count is sized to the cluster), and refresh_graph is O(accumulated
-mentions) — schedulable off-peak, exactly like Iceberg table maintenance.
+bucket count is sized to the cluster), and a refresh is O(accumulated
+mentions) in JVM joins — schedulable off-peak, exactly like Iceberg table
+maintenance — plus Python UDF work only for what arrived since the last
+refresh.
 """
 
 from __future__ import annotations
@@ -301,22 +309,24 @@ def refresh_graph_incremental(
     config: Optional[PipelineConfig] = None,
     execution_id: str = "refresh",
 ) -> dict:
-    """refresh_graph with INCREMENTAL linking: the signature / pair /
-    verification UDF stages run only over surfaces that arrived since the
-    previous refresh (linking.refresh_links_incremental state machine);
-    connected components, canonical triples, and node/edge materialize
-    remain global — they are pure JVM joins over (edges, mentions), the
-    cheap part, and a new alias edge can merge two OLD components so their
-    scope is global by nature. Converges to exactly refresh_graph's output
-    for append-only corpora (parity pytest); a re-upload that REMOVES
-    surfaces requires the full refresh_graph (state keeps dead surfaces)."""
+    """refresh_graph with MEMOIZED linking: MinHash signing runs only over
+    surfaces no earlier refresh signed, and verification only over
+    candidate pairs no earlier refresh scored
+    (linking.refresh_links_incremental). Candidate pairs are rebuilt from
+    the stored signatures of the current surfaces by the batch path's
+    candidate_pairs, so the hot-bucket cap sees current counts. Connected
+    components, canonical triples, and node/edge materialize remain global
+    — pure JVM joins over (edges, mentions), and a new alias edge can merge
+    two OLD components. Gives exactly refresh_graph's alias edges and
+    entity map (parity tests), also after re-uploads that remove
+    surfaces; the memo tables are compacted under cfg.compact_threshold."""
     cfg = config or PipelineConfig()
     t0 = time.time()
     extractions = catalog.read(spark, "extractions")
     mentions = tri.mentions_from_extractions(extractions).localCheckpoint()
     alias_edges = lnk.refresh_links_incremental(
         spark, catalog, mentions, cfg.jaccard_threshold,
-        cfg.cosine_threshold,
+        cfg.cosine_threshold, compact_threshold=cfg.compact_threshold,
     )
     catalog.overwrite(alias_edges, "alias_edges")
     return _refine_graph(spark, catalog, extractions, mentions,

@@ -75,8 +75,9 @@ class PipelineConfig:
     # co-occurrence zero-count tombstones while rewriting. The check is a
     # free manifest scan per table; the rewrite is paid once per
     # ~threshold merges, so file count AND tombstone rows stay bounded
-    # across unbounded micro-batches. None disables (callers that schedule
-    # table maintenance externally, Iceberg-style).
+    # across unbounded micro-batches. refresh_graph_incremental applies the
+    # same bound to its two append-only link memo tables. None disables
+    # (callers that schedule table maintenance externally, Iceberg-style).
     compact_threshold: Optional[int] = 8
 
 
@@ -202,8 +203,33 @@ class Pipeline:
         """Run (or resume) the full pipeline. `corpus`/`doc_tags` are only
         required on the first run; resumed runs read committed snapshots.
         `stop_after` simulates a crash directly after that step's commit
-        (used by the resume tests)."""
+        (used by the resume tests).
+
+        Steps overlapped on worker threads are joined on every exit path:
+        when a step fails, run() raises only after the writers already
+        running have finished, so a retried run never races an orphaned
+        write of the same table."""
+        pools: list = []
+        try:
+            return self._run(pools, corpus, doc_tags, resume, stop_after)
+        finally:
+            for pool in pools:
+                pool.shutdown(wait=True, cancel_futures=True)
+
+    def _run(self, pools: list, corpus: Optional[DataFrame],
+             doc_tags: Optional[DataFrame], resume: bool,
+             stop_after: Optional[str]) -> dict:
         cat, spark, cfg = self.catalog, self.spark, self.cfg
+
+        def background(fn):
+            """Submit fn on its own worker thread; run() shuts the pool
+            down."""
+            from concurrent.futures import ThreadPoolExecutor
+
+            pool = ThreadPoolExecutor(max_workers=1)
+            pools.append(pool)
+            return pool.submit(fn)
+
         done = self._completed_steps() if resume else set()
 
         def crashed(step: str) -> bool:
@@ -262,12 +288,9 @@ class Pipeline:
         # (idempotent, snapshot-overwrite) extraction. Serial under
         # stop_after, as for the other overlapped steps.
         extractions_t0 = time.time()
-        extractions_fut = extractions_pool = None
+        extractions_fut = None
         if "triples" not in done and stop_after is None:
-            from concurrent.futures import ThreadPoolExecutor
-
-            extractions_pool = ThreadPoolExecutor(max_workers=1)
-            extractions_fut = extractions_pool.submit(
+            extractions_fut = background(
                 lambda: cat.overwrite(
                     tri.extract_all_df(partitions), "extractions"
                 )
@@ -340,19 +363,16 @@ class Pipeline:
         # contract) — resume semantics are unaffected either way because the
         # ledger is a set, not a sequence. Ledger commits themselves are
         # serialized by _commit_lock.
-        save_fut = save_pool = None
+        save_fut = None
         if "save_records" not in done:
             if stop_after is None:
-                from concurrent.futures import ThreadPoolExecutor
-
-                save_pool = ThreadPoolExecutor(max_workers=1)
-                save_fut = save_pool.submit(_save_records_step)
+                save_fut = background(_save_records_step)
             else:
                 _save_records_step()
         if crashed("save_records"):
             return self.metrics
 
-        triples_fut = triples_pool = None
+        triples_fut = None
         if "triples" not in done:
             t_triples = extractions_t0
             # one Arrow pass extracts mentions AND pattern triples; the
@@ -361,7 +381,6 @@ class Pipeline:
             # under stop_after)
             if extractions_fut is not None:
                 extractions_fut.result()
-                extractions_pool.shutdown()
             else:
                 cat.overwrite(tri.extract_all_df(partitions), "extractions")
 
@@ -394,10 +413,7 @@ class Pipeline:
             # are durable, so crash/resume semantics are unchanged. Serial
             # under stop_after, where commit order is part of the contract.
             if stop_after is None:
-                from concurrent.futures import ThreadPoolExecutor
-
-                triples_pool = ThreadPoolExecutor(max_workers=1)
-                triples_fut = triples_pool.submit(_triples_base)
+                triples_fut = background(_triples_base)
             else:
                 _triples_base()
         if crashed("triples"):
@@ -432,7 +448,6 @@ class Pipeline:
             # materialize's commit_union reads the triples_base manifest —
             # join the overlapped write first
             triples_fut.result()
-            triples_pool.shutdown()
 
         if "materialize" not in done:
             def _materialize():
@@ -468,7 +483,6 @@ class Pipeline:
             # join the overlapped save_records before custom steps (which
             # may read the records table) and before returning
             save_fut.result()
-            save_pool.shutdown()
 
         # Custom steps (the IPipelineStepHandler surface, SURVEY §2.10): a
         # stage is a named DataFrame -> DataFrame function over a catalog
@@ -500,7 +514,3 @@ class Pipeline:
                 return self.metrics
 
         return self.metrics
-
-
-def read_triples(spark: SparkSession, catalog: TableCatalog) -> DataFrame:
-    return catalog.read(spark, "triples")

@@ -30,7 +30,6 @@ from typing import Iterator, List
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 SEED = 42
 
@@ -204,23 +203,3 @@ def synth_corpus(spark: SparkSession, n_docs: int, seed: int = SEED,
 
 def synth_doc_tags(spark: SparkSession, n_docs: int, seed: int = SEED) -> DataFrame:
     return synth_full(spark, n_docs, seed).select("doc_id", "tags")
-
-
-def synth_truth(spark: SparkSession, n_docs: int, seed: int = SEED) -> dict:
-    """Ground-truth DataFrames: mentions, triples (doc-level), entity aliases."""
-    full = synth_full(spark, n_docs, seed)
-    mentions = full.select(
-        "doc_id", F.explode("truth_mentions").alias("mention")
-    )
-    triples = full.select("doc_id", F.explode("truth_triples").alias("t")).select(
-        "doc_id", "t.subj", "t.pred", "t.obj"
-    )
-    alias_rows = [
-        (canonical, alias, cls)
-        for canonical, aliases, cls in ENTITIES
-        for alias in aliases
-    ]
-    aliases = spark.createDataFrame(
-        alias_rows, "canonical string, alias string, class string"
-    )
-    return {"mentions": mentions, "triples": triples, "aliases": aliases}

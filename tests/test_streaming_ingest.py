@@ -243,6 +243,209 @@ class TestIncrementalRefresh:
         assert edges_v1 == edges_v2
 
 
+def alias_norms(n_entities=None):
+    """Normalized alias surfaces of the synth vocabulary: shingle-similar
+    within an entity, dissimilar across entities."""
+    from kernel_memory_spark.functions.extraction import normalize_mention
+    from kernel_memory_spark.synth import ENTITIES
+
+    return sorted({
+        normalize_mention(a)
+        for _canon, aliases, _cls in ENTITIES[:n_entities]
+        for a in aliases
+    })
+
+
+def case_variants(text, n):
+    """n distinct spellings of `text` with one shingle set between them:
+    MinHash puts all of them in the same bucket of every band."""
+    letters = [i for i, c in enumerate(text) if c.isalpha()]
+    out = []
+    for k in range(n):
+        chars = list(text)
+        for bit, i in enumerate(letters):
+            if k >> bit & 1:
+                chars[i] = chars[i].upper()
+        out.append("".join(chars))
+    assert len(set(out)) == n
+    return out
+
+
+def norm_mentions(spark, norms):
+    return spark.createDataFrame([(n,) for n in norms], "norm string")
+
+
+def write_extractions(spark, cat, norms):
+    """Replace the catalog's extractions with one mention row per surface —
+    the only input of the link/canonicalize/materialize refresh — plus the
+    triples_base the refresh's `triples` union reads."""
+    rows = [
+        (f"doc-{i:04d}", f"doc-{i:04d}/p0", "m", n, None, n)
+        for i, n in enumerate(norms)
+    ]
+    cat.overwrite(spark.createDataFrame(
+        rows, "doc_id string, partition_id string, kind string, subj string,"
+        " pred string, obj string",
+    ), "extractions")
+    if not cat.exists("triples_base"):
+        cat.overwrite(spark.createDataFrame(
+            [("doc-0000/p0", "mentions", norms[0], "doc-0000", "e")],
+            "subj string, pred string, obj string, doc_id string,"
+            " execution_id string",
+        ), "triples_base")
+
+
+def refresh_outputs(spark, cat):
+    edges = {(r.a, r.b) for r in cat.read(spark, "alias_edges").collect()}
+    emap = {
+        (r.norm, r.canonical_id)
+        for r in cat.read(spark, "entity_map").collect()
+    }
+    return edges, emap
+
+
+def assert_refresh_parity(spark, cat):
+    """refresh_graph_incremental's alias edges and entity map equal the full
+    refresh_graph's over the same extractions. Returns the edges."""
+    si.refresh_graph_incremental(spark, cat)
+    inc = refresh_outputs(spark, cat)
+    si.refresh_graph(spark, cat)  # reads no link state, overwrites outputs
+    assert inc == refresh_outputs(spark, cat)
+    return inc[0]
+
+
+def jobs_of(spark, fn):
+    """Spark jobs `fn` launches, from the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-of-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "pinned job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestIncrementalLinkState:
+    """The two append-only memo tables behind refresh_graph_incremental:
+    link_surfaces (norm, bands) and link_edge_scores (a, b, jaccard,
+    cosine)."""
+
+    def test_parity_cold_warm_and_shrunk(self, spark, tmp_path):
+        """Cold state, warm state, and a corpus that lost surfaces (a
+        re-upload shrank documents): their memo rows stay but pair with
+        nothing."""
+        cat = TableCatalog(str(tmp_path / "cat"))
+        write_extractions(spark, cat, alias_norms(12))
+        few = assert_refresh_parity(spark, cat)
+        write_extractions(spark, cat, alias_norms())
+        assert assert_refresh_parity(spark, cat) > few
+        assert set(cat.read(spark, "link_surfaces").columns) == {
+            "norm", "bands"
+        }
+        write_extractions(spark, cat, alias_norms(12))
+        assert assert_refresh_parity(spark, cat) == few
+        assert cat.read(spark, "link_surfaces").count() == len(alias_norms())
+
+    def test_hot_cap_crossing_withdraws_pairs(self, spark, tmp_path):
+        """A band at BAND_BUCKET_CAP members goes over it between two
+        refreshes: every pair it alone justified disappears, exactly as a
+        batch link_entities over all mentions never emits them."""
+        from kernel_memory_spark.operators import linking as lnk
+
+        cap = lnk.BAND_BUCKET_CAP
+        family = case_variants("zephyr quill atelier", cap + 1)
+        cat = TableCatalog(str(tmp_path / "cat"))
+        write_extractions(spark, cat, alias_norms() + family[:-1])
+        before = assert_refresh_parity(spark, cat)
+        write_extractions(spark, cat, alias_norms() + family)
+        after = assert_refresh_parity(spark, cat)
+        in_family = {(a, b) for a, b in before if {a, b} <= set(family)}
+        assert len(in_family) == cap * (cap - 1) // 2
+        assert after == before - in_family
+
+    @pytest.mark.parametrize("band_tables", [True, False])
+    def test_old_layout_is_rebuilt(self, spark, tmp_path, band_tables):
+        """Link state written by the per-band layout (a signature-less
+        link_surfaces, link_band_* tables) is dropped and rebuilt once.
+        Stale scores planted in the old link_edge_scores would turn every
+        candidate pair into an edge if they survived."""
+        from kernel_memory_spark.operators import linking as lnk
+
+        norms = alias_norms()
+        cat = TableCatalog(str(tmp_path / "cat"))
+        write_extractions(spark, cat, norms)
+        mentions = norm_mentions(spark, norms)
+        cat.merge_bucketed(spark, "link_surfaces", mentions, ["norm"],
+                           "norm", n_buckets=4)
+        pairs = lnk.candidate_pairs(lnk.surface_signatures(mentions))
+        cat.merge_bucketed(
+            spark, "link_edge_scores",
+            pairs.select("a", "b", F.lit(1.0).alias("jaccard"),
+                         F.lit(1.0).alias("cosine")),
+            ["a", "b"], "a", n_buckets=4,
+        )
+        if band_tables:
+            for t in ("link_band_members", "link_band_pairs"):
+                cat.overwrite(spark.createDataFrame(
+                    [("0:0", "x")], "band string, norm string"), t)
+
+        edges = assert_refresh_parity(spark, cat)
+        assert edges and len(edges) < pairs.count()
+        assert not cat.exists("link_band_members")
+        assert not cat.exists("link_band_pairs")
+        assert "bands" in cat.read(spark, "link_surfaces").columns
+
+    def test_refresh_with_nothing_new_commits_nothing(self, spark, tmp_path):
+        from kernel_memory_spark.operators import linking as lnk
+
+        cat = TableCatalog(str(tmp_path / "cat"))
+        mentions = norm_mentions(spark, alias_norms())
+        lnk.refresh_links_incremental(spark, cat, mentions).collect()
+        versions = {
+            t: cat.current_version(t)
+            for t in ("link_surfaces", "link_edge_scores")
+        }
+        edges = lnk.refresh_links_incremental(spark, cat, mentions)
+        assert {(r.a, r.b) for r in edges.collect()} == {
+            (r.a, r.b) for r in lnk.link_entities(mentions).collect()
+        }
+        assert versions == {t: cat.current_version(t) for t in versions}
+
+    def test_appends_stay_bounded_by_auto_compact(self, spark, tmp_path):
+        """Every refresh that signs new surfaces appends one entry per state
+        table; auto_compact folds them once they pass the threshold."""
+        from kernel_memory_spark.operators import linking as lnk
+
+        norms = alias_norms()
+        cat = TableCatalog(str(tmp_path / "cat"))
+        entries = []
+        for k in (8, 16, 24, len(norms)):
+            mentions = norm_mentions(spark, norms[:k])
+            edges = lnk.refresh_links_incremental(
+                spark, cat, mentions, compact_threshold=2
+            )
+            entries.append(len(cat._entries("link_surfaces")))
+            assert cat.max_entries_per_bucket("link_edge_scores") <= 2
+        assert entries == [1, 2, 1, 2]
+        assert {(r.a, r.b) for r in edges.collect()} == {
+            (r.a, r.b) for r in lnk.link_entities(mentions).collect()
+        }
+        assert cat.read(spark, "link_surfaces").count() == len(norms)
+
+    def test_refresh_job_counts_pinned(self, spark, tmp_path):
+        """Jobs of a cold refresh and of a refresh with no new documents.
+        Counts do not move with host speed; a change to either means the
+        refresh's plan changed — re-pin only with the reason."""
+        cat = TableCatalog(str(tmp_path / "cat"))
+        write_extractions(spark, cat, alias_norms())
+        cold = jobs_of(spark, lambda: si.refresh_graph_incremental(spark, cat))
+        again = jobs_of(spark, lambda: si.refresh_graph_incremental(spark, cat))
+        assert (cold, again) == (34, 36)
+
+
 class TestStreamingCooccurIndex:
     def test_index_parity_and_redelivery_idempotence(
         self, spark, tmp_path, batches
