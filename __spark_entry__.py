@@ -32,16 +32,19 @@ def _query_tmpdir(prefix: str) -> str:
     index/catalog, under ONE session root that is removed at interpreter
     exit (the per-call mkdtemp dirs previously leaked across bench/gate
     runs). Each call still returns a NEW empty dir — no state is ever
-    reused between invocations. Rooted on tmpfs when available, for the
-    same reason the bench scratch is (the sandbox's single shared disk is
-    a non-scaling co-tenant-contended resource)."""
+    reused between invocations. Rooted under TMPDIR when it is set, so
+    large persisted indexes can be sent to disk; otherwise on tmpfs when
+    available, for the same reason the bench scratch is (a single shared
+    disk is a non-scaling co-tenant-contended resource)."""
     import atexit
     import shutil
     import tempfile
 
     global _TMP_ROOT
     if _TMP_ROOT is None:
-        base = "/dev/shm" if os.path.isdir("/dev/shm") else None
+        base = os.environ.get("TMPDIR") or (
+            "/dev/shm" if os.path.isdir("/dev/shm") else None
+        )
         _TMP_ROOT = tempfile.mkdtemp(prefix="kms_entry_", dir=base)
         atexit.register(shutil.rmtree, _TMP_ROOT, True)
     return tempfile.mkdtemp(prefix=prefix, dir=_TMP_ROOT)

@@ -17,12 +17,16 @@ like every other catalog table, so re-runs are idempotent per execution.
 
 from __future__ import annotations
 
+import threading
 from typing import Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 QUARANTINE_TABLE = "quarantine"
+# steps that run concurrently may quarantine at once; the table commit's
+# read-manifest/write-manifest sequence is not atomic
+_WRITE_LOCK = threading.Lock()
 
 # TagCollection.ValidateKey: ':' and '=' are reserved
 INVALID_TAG_KEY_RE = "[:=]"
@@ -81,11 +85,33 @@ def write_quarantine(catalog, quarantined: DataFrame) -> int:
     Anti-join against the existing table on (step, execution_id, key) so a
     re-run of the same execution is a no-op for already-quarantined keys."""
     spark = quarantined.sparkSession
-    if catalog.exists(QUARANTINE_TABLE):
-        existing = catalog.read(spark, QUARANTINE_TABLE).select(
-            "step", "execution_id", "key"
-        )
-        quarantined = quarantined.join(
-            existing, ["step", "execution_id", "key"], "left_anti"
-        )
-    return catalog.append(quarantined, QUARANTINE_TABLE)
+    with _WRITE_LOCK:
+        if catalog.exists(QUARANTINE_TABLE):
+            existing = catalog.read(spark, QUARANTINE_TABLE).select(
+                "step", "execution_id", "key"
+            )
+            quarantined = quarantined.join(
+                existing, ["step", "execution_id", "key"], "left_anti"
+            )
+        return catalog.append(quarantined, QUARANTINE_TABLE)
+
+
+def route_fatal_rows(
+    catalog,
+    df: DataFrame,
+    condition: Column,
+    step: str,
+    execution_id: str,
+    reason: str,
+    key_col: str = "doc_id",
+    detail: Column | None = None,
+) -> DataFrame:
+    """Quarantine `df`'s fatal rows (if any) and return the clean rows the
+    step proceeds with."""
+    clean, fatal = split_fatal_rows(df, condition)
+    quarantined = quarantine_rows(
+        fatal, step, execution_id, reason, key_col=key_col, detail=detail
+    )
+    if not quarantined.isEmpty():
+        write_quarantine(catalog, quarantined)
+    return clean

@@ -104,9 +104,10 @@ class TableCatalog:
 
     def read(self, spark: SparkSession, name: str,
              version: Optional[int] = None,
-             schema: Optional[str] = None) -> DataFrame:
-        """A caller that knows the table's `schema` (DDL string) saves the
-        schema-inference job a plain parquet read launches."""
+             schema=None) -> DataFrame:
+        """A caller that knows the table's `schema` (DDL string or
+        StructType) saves the schema-inference job a plain parquet read
+        launches."""
         manifest = self._manifest(name, version)
         paths = [
             os.path.join(self._dir(name), self._entry_path(d))
@@ -351,9 +352,13 @@ class TableCatalog:
             new_paths = [os.path.join(self._dir(name), e["path"])
                          for e in new_entries]
             anti = anti_cols or key_cols
-            old_touched = spark.read.parquet(*old_paths)
+            # both re-reads under the incoming frame's schema: no inference
+            # job, and survivors of files written before a nullable column
+            # existed carry it as null instead of mixing schemas
+            reader = spark.read.schema(df.schema)
+            old_touched = reader.parquet(*old_paths)
             if new_paths:
-                new_keys = spark.read.parquet(*new_paths).select(*anti).distinct()
+                new_keys = reader.parquet(*new_paths).select(*anti).distinct()
                 survivors = old_touched.join(new_keys, anti, "left_anti")
             else:
                 survivors = old_touched

@@ -1,32 +1,52 @@
-"""Resumable KG-construction pipeline orchestrator.
+"""Resumable KG-construction pipeline: one step table, one scheduler.
 
 Reproduces the reference's pipeline-step/resumability contract (SURVEY §2.9)
-on Spark:
+on Spark. Kernel Memory routes every document through one handler chain
+(`DataPipeline.steps` / `remaining_steps` / `completed_steps`); here that
+chain is written once, as a table of `Row(step, reads, writes, fn)`:
 
-- the step chain extract -> partition -> gen_embeddings -> save_records ->
-  triples -> link -> canonicalize -> materialize mirrors the default handler
-  chain (Constants.cs:166-169) extended with the KG stages;
-- after every stage the output is committed as a table snapshot and a
-  `step_ledger` row (step, execution_id, bucket, rows, wall_ms) is appended —
-  the columnar analog of MoveToNextStep + UpdatePipelineStatusAsync
-  (InProcessPipelineOrchestrator.cs:157-204) with per-partition lineage;
-- `resume=True` skips any step already in the ledger for this execution_id —
-  the anti-join analog of the per-file `processed_by` markers
-  (DataPipeline.cs:132-147): a re-run of a completed stage is a no-op;
-- stage inputs are read back from the committed snapshots, so a crash
-  between stages resumes exactly (snapshot isolation = Q3's rollback safety);
-- a new execution_id over the same documents purges superseded records
-  (SaveRecordsHandler.cs:297-323) via the keep-set anti-join.
+- one row per table written. `doc_rows` is the per-document chain: corpus,
+  doc_tags, extracted, partitions, embeddings, records (with quarantine
+  routing), extractions, triples_base. `graph_rows` is the global chain
+  over the extractions: alias_edges, entity_map, triples_canonical, nodes,
+  the zero-copy `triples` union and edges. Registered custom steps are
+  appended as rows. A row's `step` is its ledger step — the default
+  handler chain (Constants.cs:166-169) extended with the KG stages.
+- `run_steps` runs a table on a thread pool: a row starts once every table
+  it reads is committed, so independent rows overlap (guide §2.6); a
+  ledger step commits once all of its rows have; every row still running
+  is joined before `run_steps` returns or raises, so a retried run never
+  races an orphaned writer.
+- only the writer differs between callers. `Pipeline.run` and the graph
+  refreshes commit each frame as a snapshot overwrite and hand later rows a
+  read-back under the written frame's schema (no schema-inference job).
+  `streaming.ingest.ingest_batch` merges each frame doc-scoped and hands on
+  a lazy localCheckpoint that the merge's own write materializes. The
+  records row merges bucket-scoped on doc_id under both writers: purge of
+  superseded records + upsert (SaveRecordsHandler.cs:297-323).
+
+After a step commits, its `step_ledger` rows (step, execution_id, bucket,
+rows, wall_ms from the step's own start) are appended — the columnar analog
+of MoveToNextStep + UpdatePipelineStatusAsync
+(InProcessPipelineOrchestrator.cs:157-204) with per-partition lineage.
+`resume=True` drops the rows of steps already in the ledger for this
+execution_id (the per-file `processed_by` markers, DataPipeline.cs:132-147)
+and reads their tables from the committed snapshots, so a crash anywhere
+resumes exactly (snapshot isolation = Q3's rollback safety).
 """
 
 from __future__ import annotations
 
+import threading
 import time
+from collections import Counter
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import Callable, Dict, List, Optional
+from typing import Callable, Dict, List, NamedTuple, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from kernel_memory_spark import schema as S
 from kernel_memory_spark.operators import (
@@ -81,22 +101,258 @@ class PipelineConfig:
     compact_threshold: Optional[int] = 8
 
 
+# -- the step table ------------------------------------------------------------
+
+class Row(NamedTuple):
+    """One row of the step table: `fn(get)` builds the frame committed as
+    table `writes` from the frames of the tables in `reads` (`get(name)`),
+    or commits `writes` itself and returns None."""
+    step: Optional[str]
+    reads: Tuple[str, ...]
+    writes: str
+    fn: Callable
+
+
+def doc_rows(spark: SparkSession, catalog: TableCatalog, cfg: PipelineConfig,
+             execution_id: str, corpus: Optional[DataFrame],
+             doc_tags: Optional[DataFrame]) -> List[Row]:
+    """The per-document chain, corpus -> triples_base. `corpus` and
+    `doc_tags` are the frames the ingest rows commit (no tags row when
+    `doc_tags` is None)."""
+
+    def records(get):
+        # Fatal-row routing (ReturnType.FatalError analog): doc-tag rows
+        # whose keys fail TagCollection.ValidateKey would throw in the
+        # reference — here they go to the quarantine table and the document
+        # proceeds WITHOUT its user tags (reserved tags intact).
+        tags = get("doc_tags")
+        if tags is not None:
+            tags = qtn.route_fatal_rows(
+                catalog, tags, qtn.invalid_tag_keys_condition(),
+                "save_records", execution_id, "invalid_tag_key",
+                detail=qtn.invalid_tag_keys_detail(),
+            )
+        # F3: only TextPartition/SyntheticData artifacts become records
+        # (SaveRecordsHandler.GetListOfPartitionFiles)
+        recs = sav.build_records(
+            prt.filter_artifact_types(get("partitions")), get("embeddings"),
+            tags, get("extracted"), execution_id, cfg.last_update,
+        )
+        # Purge-of-superseded + upsert fused into ONE bucket-scoped merge
+        # (anti on doc_id = DeletePreviousRecordsAsync semantics): only the
+        # doc_id-hash buckets this batch touches are rewritten.
+        catalog.merge_bucketed(
+            spark, "records", recs, ["id"], bucket_col="doc_id",
+            n_buckets=cfg.records_buckets, anti_cols=["doc_id"],
+        )
+
+    def triples_base(get):
+        # raw tags, not the quarantine-cleaned ones: quarantine strips user
+        # tags from RECORDS only, tag-lineage triples keep them
+        lineage = tri.lineage_triples(
+            get("partitions"), get("extracted"), get("doc_tags"), execution_id
+        )
+        mentions = tri.mentions_from_extractions(get("extractions"))
+        return lineage.unionByName(tri.mention_triples(mentions, execution_id))
+
+    tags_row = [] if doc_tags is None else [
+        Row("ingest", (), "doc_tags", lambda get: doc_tags)
+    ]
+    return tags_row + [
+        Row("ingest", (), "corpus", lambda get: corpus),
+        Row("extract", ("corpus",), "extracted",
+            lambda get: ext.extract(get("corpus"))),
+        Row("partition", ("extracted",), "partitions",
+            lambda get: prt.partition(
+                get("extracted"), cfg.max_tokens, cfg.overlap, cfg.tokenizer
+            )),
+        # dedupe=False: the distinct-texts + join-back path exists to avoid
+        # paying a REMOTE model endpoint twice for identical chunks; with
+        # the hermetic hash embedder it costs a shuffle + join to save a ~µs
+        # recomputation (measured 2.2x the stage wall at a 98.6%
+        # unique-chunk rate). A model-endpoint generator should flip it on.
+        Row("gen_embeddings", ("partitions",), "embeddings",
+            lambda get: emb.gen_embeddings(
+                get("partitions"), cfg.embedding_dim, dedupe=False
+            )),
+        Row("save_records", ("partitions", "embeddings", "doc_tags",
+                             "extracted"), "records", records),
+        # one Arrow pass extracts mentions AND pattern triples; it reads
+        # only the partitions, so it overlaps embeddings and records
+        Row("triples", ("partitions",), "extractions",
+            lambda get: tri.extract_all_df(get("partitions"))),
+        Row("triples", ("partitions", "extracted", "doc_tags", "extractions"),
+            "triples_base", triples_base),
+    ]
+
+
+def graph_rows(catalog: TableCatalog, execution_id: str,
+               link: Callable[[DataFrame], DataFrame]) -> List[Row]:
+    """The global chain over the extractions table, alias_edges -> edges.
+    `link(mentions)` builds the alias edges."""
+
+    def mentions(get):
+        return tri.mentions_from_extractions(get("extractions"))
+
+    def union(get):
+        # zero-copy: the `triples` snapshot points at the base + canonical
+        # data files, nothing is rewritten
+        tables.commit_union(
+            catalog, "triples", ["triples_base", "triples_canonical"]
+        )
+
+    return [
+        Row("link", ("extractions",), "alias_edges",
+            lambda get: link(mentions(get))),
+        Row("canonicalize", ("extractions", "alias_edges"), "entity_map",
+            lambda get: czn.entity_map(mentions(get), get("alias_edges"))),
+        Row("materialize", ("extractions", "entity_map"), "triples_canonical",
+            lambda get: tri.entity_triples(
+                tri.patterns_from_extractions(get("extractions")),
+                get("entity_map"), execution_id,
+            )),
+        Row("materialize", ("extractions", "entity_map"), "nodes",
+            lambda get: czn.materialize_nodes(mentions(get), get("entity_map"))),
+        Row("materialize", ("triples_base", "triples_canonical"), "triples",
+            union),
+        Row("materialize", ("triples_canonical",), "edges",
+            lambda get: czn.materialize_edges(get("triples_canonical"))),
+    ]
+
+
+def snapshot_writer(spark: SparkSession, catalog: TableCatalog) -> Callable:
+    """Commit a row's frame as a snapshot overwrite; later rows read the
+    committed files under the written frame's schema (no inference job)."""
+    def write(name: str, df: DataFrame) -> DataFrame:
+        catalog.overwrite(df, name)
+        return catalog.read(spark, name, schema=df.schema)
+    return write
+
+
+def run_steps(spark: SparkSession, rows: List[Row],
+              write: Callable[[str, DataFrame], DataFrame],
+              read: Callable[[str], Optional[DataFrame]],
+              commit: Optional[Callable[[str, float], None]] = None,
+              stop_after: Optional[str] = None) -> None:
+    """Run a step table. A row starts on a worker thread once no unfinished
+    row writes a table it reads. `write(name, df)` commits a row's frame and
+    returns the frame later rows get for `name`; `read(name)` supplies the
+    tables no row writes. Once all rows of a ledger step have committed,
+    `commit(step, start)` runs, `start` being when the step's first row
+    started; after `stop_after`'s commit no further row starts. A failed row
+    stops further starts too. Returns, or raises the first failure, only
+    once no row is running."""
+    lock = threading.Lock()
+    frames: Dict[str, Optional[DataFrame]] = {}
+    started: Dict[str, float] = {}
+    errors: List[Exception] = []
+    left = Counter(r.step for r in rows)
+    pending, running = list(rows), []
+    finished: Future = Future()
+    pool = ThreadPoolExecutor(max_workers=max(len(rows), 1))
+    # rows run under the caller's Spark local properties (its job group),
+    # each on its own copy, taken here on the caller's thread
+    inherit = {r.writes: inheritable_thread_target(spark) for r in rows}
+
+    def get(name: str) -> Optional[DataFrame]:
+        if name not in frames:
+            frames[name] = read(name)
+        return frames[name]
+
+    def launch() -> None:  # under lock
+        unwritten = {r.writes for r in pending + running}
+        for row in [r for r in pending
+                    if unwritten.isdisjoint(set(r.reads) - {r.writes})]:
+            pending.remove(row)
+            running.append(row)
+            started.setdefault(row.step, time.time())
+            pool.submit(inherit[row.writes](execute), row)
+        if running:
+            return
+        if pending:
+            errors.append(RuntimeError(
+                f"step table rows {[r.writes for r in pending]} wait on "
+                "each other"))
+        if errors:
+            finished.set_exception(errors[0])
+        else:
+            finished.set_result(None)
+
+    def execute(row: Row) -> None:
+        try:
+            out = row.fn(get)
+            if out is not None:
+                frames[row.writes] = write(row.writes, out)
+            with lock:
+                left[row.step] -= 1
+                step_done = row.step is not None and not left[row.step]
+                if step_done and row.step == stop_after:
+                    pending.clear()
+            if step_done and commit is not None:
+                commit(row.step, started[row.step])
+        except Exception as e:  # raised on the caller's thread
+            with lock:
+                errors.append(e)
+                pending.clear()
+        with lock:
+            running.remove(row)
+            launch()
+
+    try:
+        with lock:
+            launch()
+        finished.result()
+    finally:
+        with lock:
+            pending.clear()
+        pool.shutdown(wait=True, cancel_futures=True)
+
+
+def commit_ledger(catalog: TableCatalog, step: str, execution_id: str,
+                  buckets: List[tuple], wall_ms: int) -> None:
+    """Append one ledger row per (bucket, rows_in, rows_out) of `step`.
+    Ledger rows are driver-side metadata: written with pyarrow directly,
+    not a Spark job."""
+    import datetime
+
+    import pyarrow as pa
+
+    now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+    rows = [
+        {
+            "step": step, "execution_id": execution_id, "bucket": int(b),
+            "rows_in": int(n_in), "rows_out": int(n_out),
+            "wall_ms": int(wall_ms), "committed_at": now,
+        }
+        for b, n_in, n_out in buckets
+    ]
+    arrow_schema = pa.schema(
+        [
+            ("step", pa.string()), ("execution_id", pa.string()),
+            ("bucket", pa.int32()), ("rows_in", pa.int64()),
+            ("rows_out", pa.int64()), ("wall_ms", pa.int64()),
+            ("committed_at", pa.timestamp("us")),
+        ]
+    )
+    tables.append_rows_local(catalog, LEDGER, rows, arrow_schema)
+
+
 class Pipeline:
     def __init__(self, spark: SparkSession, catalog: TableCatalog,
                  config: Optional[PipelineConfig] = None):
-        import threading
-
         self.spark = spark
         self.catalog = catalog
         self.cfg = config or PipelineConfig()
         self.metrics: Dict[str, dict] = {}
-        # serializes ledger commits: the overlapped save_records step and
-        # the KG chain may finish concurrently, and append_rows_local's
-        # read-manifest/write-manifest/replace sequence is not atomic
+        # serializes ledger commits: steps finish on worker threads, and
+        # append_rows_local's read-manifest/write-manifest/replace sequence
+        # is not atomic
         self._commit_lock = threading.Lock()
-        # (step_name, input_table, DataFrame -> DataFrame), run after the
-        # built-in chain — the IPipelineStepHandler extension point
+        # (step_name, input_table, DataFrame -> DataFrame, ...), appended to
+        # the step table — the IPipelineStepHandler extension point
         self.custom_steps: List[tuple] = []
+        # ledger step -> the table its ledger rows count (its last row's)
+        self._step_tables: Dict[str, str] = {}
 
     def register_step(self, name: str, input_table: str, fn,
                       fatal_condition=None, fatal_reason: str = "fatal_row",
@@ -144,373 +400,71 @@ class Pipeline:
             )
         return stale
 
-    def _commit_step(self, step: str, rows_in: int, rows_out: int,
-                     wall_ms: int, buckets: Optional[List[tuple]] = None) -> None:
-        import datetime
-
-        import pyarrow as pa
-
-        now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
-        rows = [
-            {
-                "step": step, "execution_id": self.cfg.execution_id,
-                "bucket": int(b), "rows_in": int(n_in), "rows_out": int(n_out),
-                "wall_ms": int(wall_ms), "committed_at": now,
-            }
-            for b, n_in, n_out in (buckets or [(0, rows_in, rows_out)])
-        ]
-        arrow_schema = pa.schema(
-            [
-                ("step", pa.string()), ("execution_id", pa.string()),
-                ("bucket", pa.int32()), ("rows_in", pa.int64()),
-                ("rows_out", pa.int64()), ("wall_ms", pa.int64()),
-                ("committed_at", pa.timestamp("us")),
-            ]
-        )
-        # ledger rows are driver-side metadata: written with pyarrow directly,
-        # not a Spark job (9 stages x 1 job of pure scheduling otherwise)
-        with self._commit_lock:
-            tables.append_rows_local(self.catalog, LEDGER, rows, arrow_schema)
-        self.metrics[step] = {
-            "rows_in": rows_in, "rows_out": rows_out, "wall_ms": wall_ms,
-        }
-
-    def _run_step(self, step: str, fn: Callable[[], DataFrame],
-                  table: str, writer: str = "overwrite") -> None:
-        t0 = time.time()
-        df = fn()
-        if writer == "merge_records":
-            self.catalog.merge(self.spark, table, df, ["id"])
-        else:
-            self.catalog.overwrite(df, table)
-
+    def _commit_step(self, step: str, start: float) -> None:
         # Per-partition lineage from parquet footers — the committed files
         # ARE the partitions; no extra Spark job for metrics.
-        file_counts = tables.table_file_counts(self.catalog, table)
+        file_counts = tables.table_file_counts(
+            self.catalog, self._step_tables[step]
+        )
         rows_out = sum(n for _, n in file_counts)
-        if self.cfg.per_bucket_metrics:
-            buckets = [(i, 0, n) for i, (_, n) in enumerate(file_counts)]
-        else:
-            buckets = None
-        wall_ms = int((time.time() - t0) * 1000)
-        self._commit_step(step, 0, rows_out, wall_ms, buckets)
+        buckets = (
+            [(i, 0, n) for i, (_, n) in enumerate(file_counts)]
+            if self.cfg.per_bucket_metrics else []
+        )
+        wall_ms = int((time.time() - start) * 1000)
+        with self._commit_lock:
+            commit_ledger(self.catalog, step, self.cfg.execution_id,
+                          buckets or [(0, 0, rows_out)], wall_ms)
+            self.metrics[step] = {
+                "rows_in": 0, "rows_out": rows_out, "wall_ms": wall_ms,
+            }
 
-    # -- the DAG -------------------------------------------------------------
+    def _read(self, name: str) -> Optional[DataFrame]:
+        """A table no row of this run writes: its committed snapshot."""
+        if not self.catalog.exists(name):
+            return None
+        df = self.catalog.read(self.spark, name)
+        # self-upgrade pre-artifact_type catalogs on read (resume safety)
+        return prt.upgrade_partitions(df) if name == "partitions" else df
+
+    def _custom_row(self, name: str, input_table: str, fn, fatal_condition,
+                    reason: str, key_col: str) -> Row:
+        """Custom steps (the IPipelineStepHandler surface, SURVEY §2.10): a
+        named DataFrame -> DataFrame function over a catalog table,
+        committed to a table of the step's name."""
+        def run(get):
+            df = get(input_table)
+            if fatal_condition is not None:
+                df = qtn.route_fatal_rows(
+                    self.catalog, df, fatal_condition, name,
+                    self.cfg.execution_id, reason, key_col=key_col,
+                )
+            return fn(df)
+        return Row(name, (input_table,), name, run)
+
+    # -- the run -------------------------------------------------------------
 
     def run(self, corpus: Optional[DataFrame] = None,
             doc_tags: Optional[DataFrame] = None, resume: bool = False,
             stop_after: Optional[str] = None) -> dict:
         """Run (or resume) the full pipeline. `corpus`/`doc_tags` are only
         required on the first run; resumed runs read committed snapshots.
-        `stop_after` simulates a crash directly after that step's commit
-        (used by the resume tests).
-
-        Steps overlapped on worker threads are joined on every exit path:
-        when a step fails, run() raises only after the writers already
-        running have finished, so a retried run never races an orphaned
-        write of the same table."""
-        pools: list = []
-        try:
-            return self._run(pools, corpus, doc_tags, resume, stop_after)
-        finally:
-            for pool in pools:
-                pool.shutdown(wait=True, cancel_futures=True)
-
-    def _run(self, pools: list, corpus: Optional[DataFrame],
-             doc_tags: Optional[DataFrame], resume: bool,
-             stop_after: Optional[str]) -> dict:
+        `stop_after` simulates a crash directly after that step's ledger
+        commit (used by the resume tests). Returns this run's per-step
+        metrics."""
         cat, spark, cfg = self.catalog, self.spark, self.cfg
-
-        def background(fn):
-            """Submit fn on its own worker thread; run() shuts the pool
-            down."""
-            from concurrent.futures import ThreadPoolExecutor
-
-            pool = ThreadPoolExecutor(max_workers=1)
-            pools.append(pool)
-            return pool.submit(fn)
-
         done = self._completed_steps() if resume else set()
-
-        def crashed(step: str) -> bool:
-            return stop_after is not None and step == stop_after
-
-        if "ingest" not in done:
-            if corpus is None:
-                raise ValueError("corpus required for a fresh run")
-            t0 = time.time()
-            if doc_tags is not None:
-                # independent writes -> concurrent jobs (overlap the per-job
-                # scheduling floor, same as the materialize stage)
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    f1 = pool.submit(cat.overwrite, corpus, "corpus")
-                    f2 = pool.submit(cat.overwrite, doc_tags, "doc_tags")
-                    f1.result(), f2.result()
-            else:
-                cat.overwrite(corpus, "corpus")
-            self._commit_step("ingest", 0,
-                              tables.table_row_count(cat, "corpus"),
-                              int((time.time() - t0) * 1000))
-        if crashed("ingest"):
-            return self.metrics
-
-        corpus_t = cat.read(spark, "corpus")
-        tags_t = cat.read(spark, "doc_tags") if cat.exists("doc_tags") else None
-
-        if "extract" not in done:
-            self._run_step("extract", lambda: ext.extract(corpus_t), "extracted")
-        if crashed("extract"):
-            return self.metrics
-        extracted = cat.read(spark, "extracted")
-
-        if "partition" not in done:
-            self._run_step(
-                "partition",
-                lambda: prt.partition(
-                    extracted, cfg.max_tokens, cfg.overlap, cfg.tokenizer
-                ),
-                "partitions",
-            )
-        if crashed("partition"):
-            return self.metrics
-        # self-upgrade pre-artifact_type catalogs on read (resume safety)
-        partitions = prt.upgrade_partitions(cat.read(spark, "partitions"))
-
-        # The extractions table (one Arrow pass of mention/pattern rules
-        # over partition text) depends ONLY on the committed partitions
-        # table — not on embeddings or records — so its write starts here
-        # and overlaps the gen_embeddings + save_records stages (guide
-        # §2.6). The "triples" step below joins this future before doing
-        # anything, and its ledger row still commits only after all triples
-        # writes are durable; a crash before that row simply re-runs the
-        # (idempotent, snapshot-overwrite) extraction. Serial under
-        # stop_after, as for the other overlapped steps.
-        extractions_t0 = time.time()
-        extractions_fut = None
-        if "triples" not in done and stop_after is None:
-            extractions_fut = background(
-                lambda: cat.overwrite(
-                    tri.extract_all_df(partitions), "extractions"
-                )
-            )
-
-        if "gen_embeddings" not in done:
-            # dedupe=False: the distinct-texts + join-back path exists to
-            # avoid paying a REMOTE model endpoint twice for identical
-            # chunks; with the hermetic hash embedder it costs a shuffle +
-            # join to save a ~µs recomputation (measured 2.2x the stage wall
-            # at a 98.6% unique-chunk rate). A deployment that swaps in a
-            # model-endpoint generator should flip this back on — the
-            # operator keeps the parameter.
-            self._run_step(
-                "gen_embeddings",
-                lambda: emb.gen_embeddings(
-                    partitions, cfg.embedding_dim, dedupe=False
-                ),
-                "embeddings",
-            )
-        if crashed("gen_embeddings"):
-            return self.metrics
-        embeddings = cat.read(spark, "embeddings")
-
-        def _save_records_step():
-            t0 = time.time()
-            # Fatal-row routing (ReturnType.FatalError analog): doc-tag rows
-            # whose keys fail TagCollection.ValidateKey would throw in the
-            # reference — here they are split to the quarantine table and the
-            # document proceeds WITHOUT its user tags (reserved tags intact).
-            clean_tags = tags_t
-            if tags_t is not None:
-                clean_tags, fatal = qtn.split_fatal_rows(
-                    tags_t, qtn.invalid_tag_keys_condition()
-                )
-                quarantined = qtn.quarantine_rows(
-                    fatal, "save_records", cfg.execution_id,
-                    "invalid_tag_key",
-                    detail=qtn.invalid_tag_keys_detail(),
-                )
-                if not quarantined.isEmpty():
-                    qtn.write_quarantine(cat, quarantined)
-            # F3: only TextPartition/SyntheticData artifacts become records
-            # (SaveRecordsHandler.GetListOfPartitionFiles)
-            savable = prt.filter_artifact_types(partitions)
-            records = sav.build_records(
-                savable, embeddings, clean_tags, extracted,
-                cfg.execution_id, cfg.last_update,
-            )
-            # Purge-of-superseded + upsert fused into ONE bucket-scoped merge
-            # (anti on doc_id = DeletePreviousRecordsAsync semantics): only
-            # the doc_id-hash buckets this execution touches are rewritten —
-            # at 100TB an incremental ingest no longer rewrites the table.
-            self.catalog.merge_bucketed(
-                spark, "records", records, ["id"],
-                bucket_col="doc_id", n_buckets=cfg.records_buckets,
-                anti_cols=["doc_id"],
-            )
-            rows_out = tables.table_row_count(cat, "records")
-            self._commit_step("save_records", 0, rows_out,
-                              int((time.time() - t0) * 1000))
-
-        # save_records touches only the records/quarantine tables; the
-        # triples -> link -> canonicalize -> materialize chain reads none of
-        # them. Submitting save_records on a worker thread lets its jobs
-        # back-fill executor capacity left by the KG chain's stage tails
-        # (guide §2.6 — on a real cluster the FAIR scheduler does the same),
-        # hiding its wall entirely. The serial path is kept whenever
-        # `stop_after` simulates a crash (commit order is then part of the
-        # contract) — resume semantics are unaffected either way because the
-        # ledger is a set, not a sequence. Ledger commits themselves are
-        # serialized by _commit_lock.
-        save_fut = None
-        if "save_records" not in done:
-            if stop_after is None:
-                save_fut = background(_save_records_step)
-            else:
-                _save_records_step()
-        if crashed("save_records"):
-            return self.metrics
-
-        triples_fut = None
-        if "triples" not in done:
-            t_triples = extractions_t0
-            # one Arrow pass extracts mentions AND pattern triples; the
-            # extractions table is what the link/canonicalize chain reads —
-            # join the overlapped write started above (or run it serially
-            # under stop_after)
-            if extractions_fut is not None:
-                extractions_fut.result()
-            else:
-                cat.overwrite(tri.extract_all_df(partitions), "extractions")
-
-            def _triples_base():
-                lineage = tri.lineage_triples(
-                    partitions, extracted, tags_t, cfg.execution_id
-                )
-                mentions = tri.mentions_from_extractions(
-                    cat.read(spark, "extractions")
-                )
-                df = lineage.unionByName(
-                    tri.mention_triples(mentions, cfg.execution_id)
-                )
-                cat.overwrite(df, "triples_base")
-                file_counts = tables.table_file_counts(cat, "triples_base")
-                rows_out = sum(n for _, n in file_counts)
-                buckets = (
-                    [(i, 0, n) for i, (_, n) in enumerate(file_counts)]
-                    if self.cfg.per_bucket_metrics else None
-                )
-                self._commit_step(
-                    "triples", 0, rows_out,
-                    int((time.time() - t_triples) * 1000), buckets,
-                )
-
-            # triples_base is read by nothing until materialize's
-            # commit_union, so its write overlaps the link/canonicalize
-            # chain (guide §2.6 back-fill, same pattern as save_records);
-            # the "triples" ledger row still only commits once BOTH writes
-            # are durable, so crash/resume semantics are unchanged. Serial
-            # under stop_after, where commit order is part of the contract.
-            if stop_after is None:
-                triples_fut = background(_triples_base)
-            else:
-                _triples_base()
-        if crashed("triples"):
-            return self.metrics
-
-        def _mentions():
-            return tri.mentions_from_extractions(cat.read(spark, "extractions"))
-
-        if "link" not in done:
-            self._run_step(
-                "link",
-                lambda: lnk.link_entities(
-                    _mentions(), cfg.jaccard_threshold, cfg.cosine_threshold,
-                ),
-                "alias_edges",
-            )
-        if crashed("link"):
-            return self.metrics
-
-        if "canonicalize" not in done:
-            self._run_step(
-                "canonicalize",
-                lambda: czn.entity_map(
-                    _mentions(), cat.read(spark, "alias_edges")
-                ),
-                "entity_map",
-            )
-        if crashed("canonicalize"):
-            return self.metrics
-
-        if triples_fut is not None:
-            # materialize's commit_union reads the triples_base manifest —
-            # join the overlapped write first
-            triples_fut.result()
-
-        if "materialize" not in done:
-            def _materialize():
-                from concurrent.futures import ThreadPoolExecutor
-
-                emap = cat.read(spark, "entity_map")
-                canonical = tri.entity_triples(
-                    tri.patterns_from_extractions(cat.read(spark, "extractions")),
-                    emap, cfg.execution_id,
-                )
-                nodes = czn.materialize_nodes(_mentions(), emap)
-                # canonical-triples and nodes are independent jobs: submit
-                # them concurrently so the per-job scheduling/codegen floor
-                # overlaps instead of serializing (a real cluster's FAIR
-                # scheduler does the same; shaves one job's latency from the
-                # stage's serial floor)
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    f1 = pool.submit(cat.overwrite, canonical, "triples_canonical")
-                    f2 = pool.submit(cat.overwrite, nodes, "nodes")
-                    f1.result(), f2.result()
-                # zero-copy union: `triples` snapshot points at the base +
-                # canonical data files, nothing is rewritten
-                tables.commit_union(
-                    self.catalog, "triples", ["triples_base", "triples_canonical"]
-                )
-                return czn.materialize_edges(cat.read(spark, "triples_canonical"))
-
-            self._run_step("materialize", _materialize, "edges")
-        if crashed("materialize"):
-            return self.metrics
-
-        if save_fut is not None:
-            # join the overlapped save_records before custom steps (which
-            # may read the records table) and before returning
-            save_fut.result()
-
-        # Custom steps (the IPipelineStepHandler surface, SURVEY §2.10): a
-        # stage is a named DataFrame -> DataFrame function over a catalog
-        # table; output commits to a table of the step's name with the same
-        # ledger/resume semantics as the built-in chain.
-        for step_name, input_table, fn, fatal_cond, reason, key_col in (
-            self.custom_steps
-        ):
-            if step_name not in done:
-                def _input(t=input_table, cond=fatal_cond, step=step_name,
-                           rsn=reason, kc=key_col):
-                    df = cat.read(spark, t)
-                    if cond is None:
-                        return df
-                    clean, fatal = qtn.split_fatal_rows(df, cond)
-                    quarantined = qtn.quarantine_rows(
-                        fatal, step, cfg.execution_id, rsn, key_col=kc
-                    )
-                    if not quarantined.isEmpty():
-                        qtn.write_quarantine(cat, quarantined)
-                    return clean
-
-                self._run_step(
-                    step_name,
-                    lambda fn=fn, inp=_input: fn(inp()),
-                    step_name,
-                )
-            if crashed(step_name):
-                return self.metrics
-
+        if "ingest" not in done and corpus is None:
+            raise ValueError("corpus required for a fresh run")
+        rows = (
+            doc_rows(spark, cat, cfg, cfg.execution_id, corpus, doc_tags)
+            + graph_rows(cat, cfg.execution_id, lambda mentions:
+                         lnk.link_entities(mentions, cfg.jaccard_threshold,
+                                           cfg.cosine_threshold))
+            + [self._custom_row(*s) for s in self.custom_steps]
+        )
+        self._step_tables = {r.step: r.writes for r in rows}
+        run_steps(spark, [r for r in rows if r.step not in done],
+                  snapshot_writer(spark, cat), self._read, self._commit_step,
+                  stop_after)
         return self.metrics

@@ -178,3 +178,54 @@ class TestNullBucketKey:
             ["id"], "doc_id", n_buckets=4,
         )
         assert cat.read(spark, "t").count() == 3
+
+
+def data_file_columns(cat, name):
+    """Column names of every parquet file the table's snapshot holds."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for e in cat._entries(name):
+        for dirpath, _dirs, files in os.walk(os.path.join(cat._dir(name), e["path"])):
+            out += [pq.read_schema(os.path.join(dirpath, f)).names
+                    for f in files if f.endswith(".parquet")]
+    return out
+
+
+class TestMergeRereads:
+    def test_merge_into_existing_table_jobs_pinned(self, spark, tmp_path,
+                                                   jobs_of):
+        """A merge into an existing table re-reads the touched old buckets
+        and the new keys under the incoming frame's schema, so neither read
+        launches a schema-inference job. Re-pin only with the reason."""
+        cat = TableCatalog(str(tmp_path))
+        cat.merge_bucketed(spark, "t", rows(spark, [("a", 1), ("b", 1)]),
+                           ["id"], "doc_id", n_buckets=4)
+        jobs = jobs_of(lambda: cat.merge_bucketed(
+            spark, "t", rows(spark, [("a", 1), ("c", 1)]),
+            ["id"], "doc_id", n_buckets=4,
+        ))
+        assert jobs == 6
+        assert cat.read(spark, "t").count() == 3
+
+    def test_survivors_carry_a_new_nullable_column(self, spark, tmp_path):
+        """The incoming frame has a nullable column the old files lack: the
+        rewritten survivors carry it as null, so every file of the table
+        has one schema."""
+        cat = TableCatalog(str(tmp_path))
+        cat.merge_bucketed(
+            spark, "t", rows(spark, [("a", 1), ("a", 2), ("b", 1)]),
+            ["id"], "doc_id", n_buckets=1,
+        )
+        wider = spark.createDataFrame(
+            [("d=a//p=1", "a", "text-a-1", "en")],
+            "id string, doc_id string, text string, lang string",
+        )
+        cat.merge_bucketed(spark, "t", wider, ["id"], "doc_id", n_buckets=1)
+        cols = data_file_columns(cat, "t")
+        assert len(cols) >= 2
+        assert all(c == ["id", "doc_id", "text", "lang"] for c in cols)
+        got = {(r.id, r.lang) for r in cat.read(spark, "t").collect()}
+        assert got == {
+            ("d=a//p=1", "en"), ("d=a//p=2", None), ("d=b//p=1", None),
+        }

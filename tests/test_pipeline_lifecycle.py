@@ -1,7 +1,10 @@
 """Lifecycle guarantees around the pipeline's worker threads and the
 session's one-time Python-worker prewarm."""
 
+import random
+import sys
 import threading
+import time
 import types
 
 import pytest
@@ -9,7 +12,9 @@ import pytest
 from kernel_memory_spark import session
 from kernel_memory_spark.operators import embeddings as emb
 from kernel_memory_spark.sources.tables import TableCatalog
-from kernel_memory_spark.streaming.pipeline import Pipeline, PipelineConfig
+from kernel_memory_spark.streaming.pipeline import (
+    Pipeline, PipelineConfig, Row, run_steps,
+)
 from kernel_memory_spark.synth import synth_full
 
 
@@ -41,6 +46,100 @@ class TestPipelineFailure:
                 full.select("doc_id", "spans"), full.select("doc_id", "tags")
             )
         assert not _pool_threads() - before
+
+
+class TestRunSteps:
+    """The scheduler alone, over rows that launch no Spark job."""
+
+    def test_stress_wide_table(self, spark):
+        """96 rows in three layers, each row reading two of the layer
+        before, under a short switch interval: every row runs once and only
+        after the tables it reads were written, and every step commits once,
+        after all of its rows."""
+        width, log_lock = 32, threading.Lock()
+        began, written, commits = {}, {}, []
+
+        def fn(name):
+            def run(get):
+                with log_lock:
+                    began[name] = began.get(name, []) + [time.monotonic()]
+                time.sleep(random.random() / 200)
+                return name
+            return run
+
+        def write(name, value):
+            with log_lock:
+                written[name] = time.monotonic()
+            return value
+
+        def commit(step, _start):
+            with log_lock:
+                commits.append((step, time.monotonic()))
+
+        rows = [Row("s0", (), f"a{i}", fn(f"a{i}")) for i in range(width)]
+        for layer, prev in (("s1", "a"), ("s2", "b")):
+            cur = "b" if prev == "a" else "c"
+            rows += [Row(layer, (f"{prev}{i}", f"{prev}{(i + 1) % width}"),
+                         f"{cur}{i}", fn(f"{cur}{i}")) for i in range(width)]
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            t = threading.Thread(target=run_steps, args=(
+                spark, rows, write, lambda name: None, commit))
+            t.start()
+            t.join(timeout=60)
+        finally:
+            sys.setswitchinterval(old)
+        assert not t.is_alive()
+        assert all(len(began[r.writes]) == 1 for r in rows)
+        for r in rows:
+            assert all(written[t] < began[r.writes][0] for t in r.reads)
+        assert sorted(s for s, _ in commits) == ["s0", "s1", "s2"]
+        for step, at in commits:
+            assert all(written[r.writes] <= at for r in rows if r.step == step)
+
+    def test_failed_row_joins_the_others_and_starts_nothing(self, spark):
+        done = []
+
+        def fail(get):
+            raise ValueError("boom")
+
+        def slow(get):
+            time.sleep(0.3)
+            done.append("slow")
+
+        rows = [Row("x", (), "a", fail), Row("y", (), "b", slow),
+                Row("z", ("a",), "c", lambda get: done.append("after"))]
+        before = _pool_threads()
+        with pytest.raises(ValueError, match="boom"):
+            run_steps(spark, rows, lambda n, v: v, lambda n: None)
+        assert done == ["slow"]
+        assert not _pool_threads() - before
+
+
+class TestStepWalls:
+    SLEEP_S = 6
+
+    def test_triples_wall_excludes_a_slow_embedding_step(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Each ledger step stamps its own start: gen_embeddings slowed by
+        a fixed sleep does not show in the wall of the triples step, which
+        runs alongside it."""
+        full = synth_full(spark, 4).select("doc_id", "spans", "tags")
+        real = emb.gen_embeddings
+
+        def slow(*args, **kwargs):
+            time.sleep(self.SLEEP_S)
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(emb, "gen_embeddings", slow)
+        cat = TableCatalog(str(tmp_path / "cat"))
+        metrics = Pipeline(spark, cat, PipelineConfig(execution_id="e1")).run(
+            full.select("doc_id", "spans"), full.select("doc_id", "tags")
+        )
+        assert metrics["gen_embeddings"]["wall_ms"] >= self.SLEEP_S * 1000
+        assert metrics["triples"]["wall_ms"] < self.SLEEP_S * 1000
 
 
 class _FakeSession:
