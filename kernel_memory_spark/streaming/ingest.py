@@ -46,7 +46,7 @@ refresh.
 from __future__ import annotations
 
 import time
-from typing import Callable, Optional
+from typing import Callable, Dict, Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -82,18 +82,19 @@ def ingest_batch(
     """Run the per-document rows for one micro-batch, merging each into the
     shared tables. Idempotent per (execution_id, batch content)."""
     t0 = time.time()
-    # the ledger's doc count rides the corpus merge's write via observe() —
-    # a metric must not cost a second pass over the batch source
-    docs = Observation()
+    # each merge's row count rides its own write via observe() — a metric
+    # must not cost a second pass over the batch (observed below the
+    # checkpoint, the count would come from no query and read 0)
+    counts: Dict[str, Observation] = {}
 
     def merge(name: str, df: DataFrame) -> DataFrame:
         # lazy: the merge's own write materializes the checkpoint, so later
         # rows read it instead of re-running the UDF chain behind `df`
         ck = df.localCheckpoint(eager=False)
-        out = (ck.observe(docs, F.count(F.lit(1)).alias("n"))
-               if name == "corpus" else ck)
+        counts[name] = Observation()
+        observed = ck.observe(counts[name], F.count(F.lit(1)).alias("n"))
         catalog.merge_bucketed(
-            spark, name, out, ["doc_id"], bucket_col="doc_id",
+            spark, name, observed, ["doc_id"], bucket_col="doc_id",
             n_buckets=cfg.records_buckets,
         )
         return ck
@@ -124,7 +125,7 @@ def ingest_batch(
     run_steps(spark, rows, merge, read=lambda name: None)
 
     wall_ms = int((time.time() - t0) * 1000)
-    n_docs = int(docs.get["n"])
+    n_docs = int(counts["corpus"].get["n"])
     commit_ledger(catalog, "stream_batch", execution_id,
                   [(0, n_docs, n_docs)], wall_ms)
     compacted = (

@@ -245,14 +245,11 @@ def run_steps(spark: SparkSession, rows: List[Row],
     lock = threading.Lock()
     frames: Dict[str, Optional[DataFrame]] = {}
     started: Dict[str, float] = {}
-    errors: List[Exception] = []
+    errors: List[BaseException] = []
     left = Counter(r.step for r in rows)
     pending, running = list(rows), []
     finished: Future = Future()
     pool = ThreadPoolExecutor(max_workers=max(len(rows), 1))
-    # rows run under the caller's Spark local properties (its job group),
-    # each on its own copy, taken here on the caller's thread
-    inherit = {r.writes: inheritable_thread_target(spark) for r in rows}
 
     def get(name: str) -> Optional[DataFrame]:
         if name not in frames:
@@ -266,7 +263,7 @@ def run_steps(spark: SparkSession, rows: List[Row],
             pending.remove(row)
             running.append(row)
             started.setdefault(row.step, time.time())
-            pool.submit(inherit[row.writes](execute), row)
+            pool.submit(targets[row.writes], row)
         if running:
             return
         if pending:
@@ -290,14 +287,23 @@ def run_steps(spark: SparkSession, rows: List[Row],
                     pending.clear()
             if step_done and commit is not None:
                 commit(row.step, started[row.step])
-        except Exception as e:  # raised on the caller's thread
+        except BaseException as e:  # raised on the caller's thread
             with lock:
                 errors.append(e)
                 pending.clear()
-        with lock:
-            running.remove(row)
-            launch()
+        finally:
+            with lock:
+                running.remove(row)
+                launch()
 
+    def inherit() -> Callable[[Row], None]:
+        # a row runs under the caller's Spark local properties (its job
+        # group), on its own copy taken here on the caller's thread; with
+        # pinned threads off there is no per-thread copy to carry
+        wrap = inheritable_thread_target(spark)
+        return execute if wrap is spark else wrap(execute)
+
+    targets = {r.writes: inherit() for r in rows}
     try:
         with lock:
             launch()

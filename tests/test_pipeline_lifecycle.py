@@ -12,6 +12,7 @@ import pytest
 from kernel_memory_spark import session
 from kernel_memory_spark.operators import embeddings as emb
 from kernel_memory_spark.sources.tables import TableCatalog
+from kernel_memory_spark.streaming import pipeline
 from kernel_memory_spark.streaming.pipeline import (
     Pipeline, PipelineConfig, Row, run_steps,
 )
@@ -115,6 +116,39 @@ class TestRunSteps:
             run_steps(spark, rows, lambda n, v: v, lambda n: None)
         assert done == ["slow"]
         assert not _pool_threads() - before
+
+    def test_base_exception_row_is_raised_not_hung(self, spark):
+        """A row that raises outside Exception (SystemExit here) still
+        leaves the running set, and the caller gets the raise."""
+        def leave(get):
+            raise SystemExit(3)
+
+        got = []
+
+        def call():
+            try:
+                run_steps(spark, [Row("x", (), "a", leave),
+                                  Row("y", ("a",), "b", got.append)],
+                          lambda n, v: v, lambda n: None)
+            except SystemExit as e:
+                got.append(e.code)
+
+        t = threading.Thread(target=call, daemon=True)
+        t.start()
+        t.join(timeout=30)
+        assert not t.is_alive()
+        assert got == [3]
+
+    def test_pinned_threads_off(self, spark, monkeypatch):
+        """With pinned-thread mode off, pyspark's inheritable_thread_target
+        hands the session back unchanged; rows then run unwrapped."""
+        monkeypatch.setattr(pipeline, "inheritable_thread_target",
+                            lambda f=None: f)
+        ran = []
+        rows = [Row("x", (), "a", lambda get: ran.append("a") or "a"),
+                Row("y", ("a",), "b", lambda get: ran.append(get("a")))]
+        run_steps(spark, rows, lambda n, v: v, lambda n: None)
+        assert ran == ["a", "a"]
 
 
 class TestStepWalls:

@@ -314,20 +314,6 @@ def assert_refresh_parity(spark, cat):
     return inc[0]
 
 
-def jobs_of(spark, fn):
-    """Spark jobs `fn` launches, from the status tracker."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs-of-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "pinned job count")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 class TestIncrementalLinkState:
     """The two append-only memo tables behind refresh_graph_incremental:
     link_surfaces (norm, bands) and link_edge_scores (a, b, jaccard,
@@ -435,14 +421,14 @@ class TestIncrementalLinkState:
         }
         assert cat.read(spark, "link_surfaces").count() == len(norms)
 
-    def test_refresh_job_counts_pinned(self, spark, tmp_path):
+    def test_refresh_job_counts_pinned(self, spark, tmp_path, jobs_of):
         """Jobs of a cold refresh and of a refresh with no new documents.
         Counts do not move with host speed; a change to either means the
         refresh's plan changed — re-pin only with the reason."""
         cat = TableCatalog(str(tmp_path / "cat"))
         write_extractions(spark, cat, alias_norms())
-        cold = jobs_of(spark, lambda: si.refresh_graph_incremental(spark, cat))
-        again = jobs_of(spark, lambda: si.refresh_graph_incremental(spark, cat))
+        cold = jobs_of(lambda: si.refresh_graph_incremental(spark, cat))
+        again = jobs_of(lambda: si.refresh_graph_incremental(spark, cat))
         assert (cold, again) == (29, 31)
 
 
